@@ -93,11 +93,17 @@ def _vm_hwm_mb(pid: int) -> float:
     return 0.0
 
 
-def _dir_bytes(path: Path, suffix: str = "") -> int:
-    return sum(
-        f.stat().st_size for f in path.rglob(f"*{suffix}")
+def _avro_files(path: Path) -> list[Path]:
+    """Visible ``.avro`` files under ``path`` (hidden and ``_``-prefixed
+    files are not data, by the engine's convention)."""
+    return sorted(
+        f for f in path.rglob("*.avro")
         if f.is_file() and not f.name.startswith((".", "_"))
     )
+
+
+def _size(files: list[Path]) -> int:
+    return sum(f.stat().st_size for f in files)
 
 
 def _median(xs: list[float]) -> float:
@@ -314,8 +320,9 @@ class CompactWorkload:
         self.leaves = gen.write_avro_folder(
             str(self.src), self.table, AVRO_FILES, seed
         )
-        self.src_bytes = _dir_bytes(self.src, ".avro")
-        self.src_files = sum(1 for _ in self.src.rglob("*.avro"))
+        src_files = _avro_files(self.src)
+        self.src_bytes = _size(src_files)
+        self.src_files = len(src_files)
         self.cols = list(self.table.column_names)
         self.want = table_rows(self.table, self.cols)
         # Warm-up: compact a small folder of the same shape once.
@@ -345,10 +352,10 @@ class CompactWorkload:
             shutil.rmtree(self.work / d, ignore_errors=True)
             (self.work / d).mkdir()
         shutil.rmtree(tgt, ignore_errors=True)
-        for leaf in sorted({p.parent for p in src.rglob("*.avro")}):
+        for leaf in sorted({p.parent for p in _avro_files(src)}):
             dst = tgt / leaf.relative_to(src)
             dst.mkdir(parents=True)
-            shutil.copy(next(iter(sorted(leaf.glob("*.avro")))), dst / "old.avro")
+            shutil.copy(_avro_files(leaf)[0], dst / "old.avro")
 
     def _compact(self, src: Path, tgt: Path):
         from spark_dba_spark.plans.compact import compact
@@ -361,7 +368,7 @@ class CompactWorkload:
 
         p = self.params(self.src, self.work / "tgt")
         return sum(
-            planned_file_count(p, _dir_bytes(Path(leaf), ".avro"))
+            planned_file_count(p, _size(_avro_files(Path(leaf))))
             for leaf in self.leaves
         )
 
@@ -372,7 +379,7 @@ class CompactWorkload:
         bad = {k: v for k, v in res.partitions.items() if v != "SUCCESS"}
         if not res.success or bad or len(res.partitions) != len(self.leaves):
             errors.append(f"compact: statuses {res.partitions} {res.errors}")
-        n_out = sum(1 for _ in tgt.rglob("*.avro"))
+        n_out = len(_avro_files(tgt))
         if n_out != self.expected_files():
             errors.append(f"compact: {n_out} files != planned {self.expected_files()}")
         if not (tgt / ".defraglog").is_file():
@@ -408,10 +415,9 @@ class CompactWorkload:
             if tracer is not None:  # outputs are checked untraced
                 tracer.uninstall()
         errors = self.check(res, tgt)
-        out_bytes = _dir_bytes(tgt, ".avro")
-        n_out = sum(1 for _ in tgt.rglob("*.avro"))
+        out = _avro_files(tgt)
         op = {"name": "compact", "wall_s": wall, "rows": self.table.num_rows,
-              "out_bytes": out_bytes, "out_files": n_out}
+              "out_bytes": _size(out), "out_files": len(out)}
         return {"ops": [op], "errors": errors, "attempted": 1, "wall_s": wall,
                 "rows": self.table.num_rows}
 

@@ -55,11 +55,6 @@ class CountingFS:
     def open_input_file(self, path):
         return _CountingFile(self._fs.open_input_file(path), self._log_dir, "r")
 
-    def open_input_stream(self, path, *args, **kwargs):
-        return _CountingFile(
-            self._fs.open_input_stream(path, *args, **kwargs), self._log_dir, "r"
-        )
-
     def open_output_stream(self, path, *args, **kwargs):
         return _CountingFile(
             self._fs.open_output_stream(path, *args, **kwargs), self._log_dir, "w"
