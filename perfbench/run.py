@@ -460,13 +460,38 @@ def end_to_end(wl, passes: list[dict], setup_s: float, s: Session) -> dict:
     return {k: {"value": v, "unit": END_TO_END_UNITS[k]} for k, v in values.items()}
 
 
+def run_all(args) -> int:
+    """Run each workload listed in BENCHMARK.json in its own process and
+    print ``{"workload": name, **result}`` for each."""
+    names = [w["name"] for w in json.loads(
+        (ROOT / "BENCHMARK.json").read_text())["workloads"]]
+    rc = 0
+    for name in names:
+        proc = subprocess.run(
+            [sys.executable, __file__, "--workload", name, "--seed",
+             str(args.seed), "--seconds", str(args.seconds), "--trace",
+             str(args.trace)],
+            stdout=subprocess.PIPE, text=True, check=False,
+        )
+        rc = rc or proc.returncode
+        lines = proc.stdout.strip().splitlines()
+        result = json.loads(lines[-1]) if proc.returncode == 0 and lines else {
+            "error": f"exit code {proc.returncode}"}
+        print(json.dumps({"workload": name, **result}), flush=True)
+    return rc
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--workload", required=True, choices=WORKLOADS)
+    ap.add_argument("--workload", required=True, choices=WORKLOADS + ("all",),
+                    help="'all' runs every workload in BENCHMARK.json, each "
+                    "in its own process, and prints one result line each")
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    if args.workload == "all":
+        return run_all(args)
 
     if not (ROOT / "spark_dba_spark").is_dir() or not (ROOT / "tools").is_dir():
         _log(f"engine sources not found under {ROOT}; run from a full checkout")
